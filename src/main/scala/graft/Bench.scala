@@ -80,15 +80,16 @@ object Bench {
     // lower core count stops clobbering the 32-core record (VERDICT
     // r17 "Next round" #2). Best-effort — a read-only CWD must not
     // fail the bench itself.
-    try {
-      val dir = java.nio.file.Paths.get("bench")
-      java.nio.file.Files.createDirectories(dir)
-      val out = if (full) "last_full.json" else "last.json"
-      java.nio.file.Files.writeString(dir.resolve(out), line + "\n")
-      val perCore = if (full) s"last_full_c$cpus.json" else s"last_c$cpus.json"
-      java.nio.file.Files.writeString(dir.resolve(perCore), line + "\n")
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write bench/last.json: ${e.getMessage}")
+    val dir = java.nio.file.Paths.get("bench")
+    val outs = if (full) Seq("last_full.json", s"last_full_c$cpus.json")
+      else Seq("last.json", s"last_c$cpus.json")
+    outs.foreach { out =>
+      try {
+        java.nio.file.Files.createDirectories(dir)
+        java.nio.file.Files.writeString(dir.resolve(out), line + "\n")
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] could not write bench/$out: ${e.getMessage}")
+      }
     }
     println(line)
     spark.stop()

@@ -1,7 +1,10 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 
 
 import graft.Tables
@@ -1253,29 +1256,110 @@ object Similarity {
       .select(col("cid"), coalesce(col("mn"), col("pm")).as("m"))
   }
 
-  /** The training loop: seeds = the K corpus vectors with the
-    * smallest md5(vec_id‖':seed') draws (cid = draw rank — a
-    * bounded-heap global top-K, the e10 discipline, so seeding needs
-    * no global sort), then [[KmIters]] exact Lloyd iterations.
-    * Subplan.once pins each iteration's K-row centroid table so the
-    * composed plan stays flat (the t24 round-frontier discipline). */
-  private[graft] def kmeansCentroids(fx: DataFrame,
-      k: Int = KmK): DataFrame = {
-    val draw = conv(substring(md5(concat(col("vec_id").cast("string"),
+  /** The seed draw: vectors rank by (draw, vec_id) ascending and the
+    * first K seed the centroids, cid = rank. ONE expression for the
+    * k-means and PQ trainers on both paths, so the driver fold ranks
+    * by the Spark-computed draw rather than a JVM md5 restatement. */
+  private def seedDraw: Column =
+    conv(substring(md5(concat(col("vec_id").cast("string"),
       lit(":seed"))), 1, 8), 16, 10).cast("long")
-    val seedIds = fx.select(col("vec_id"), draw.as("draw"))
+
+  /** The distributed seeding: a bounded-heap global top-K over the
+    * draw (the e10 discipline, so seeding needs no global sort). */
+  private def seedIdsOf(fx: DataFrame, k: Int): DataFrame =
+    fx.select(col("vec_id"), seedDraw.as("draw"))
       .agg(graft.functions.TopKAgg.topK(
         struct((-col("draw")).as("nd"), (-col("vec_id")).as("nv"),
           col("vec_id")), k).as("top"))
       .select(posexplode(col("top")))
       .select(col("pos").cast("int").as("cid"), col("col.vec_id").as("vec_id"))
-    var cents = graft.ops.Subplan.once(
-      fx.join(broadcast(seedIds), Seq("vec_id"))
-        .select(col("cid"), col("x").as("m")))
-    for (_ <- 1 to KmIters)
-      cents = graft.ops.Subplan.once(kmUpdate(kmAssign(fx, cents), cents))
+
+  /** The driver seeding: the same ranking over collected
+    * (vec_id, draw, point) rows — the first `k` points by
+    * (draw, vec_id). */
+  private def seedPoints[P: scala.reflect.ClassTag](rows: Array[(Long, Long, P)],
+      k: Int): Array[P] =
+    rows.sortBy(r => (r._2, r._1)).take(k).map(_._3)
+
+  /** [[graft.functions.NearestId]] on driver arrays: the cid (index
+    * into `cents`) at the least exact int64 squared distance, ties to
+    * the lowest cid. */
+  private[graft] def nearestCid(x: Array[Long], cents: Array[Array[Long]]): Int = {
+    var best = -1
+    var bestD = Long.MaxValue
+    var c = 0
+    while (c < cents.length) {
+      val m = cents(c)
+      val n = math.min(x.length, m.length)
+      var d = 0L
+      var i = 0
+      while (i < n) { val t = x(i) - m(i); d += t * t; i += 1 }
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
+  }
+
+  /** THE exact-integer Lloyd fold on driver-held lattice points —
+    * [[kmAssign]] + [[kmUpdate]] for `iters` rounds from `seeds`
+    * (cid = index): nearest centroid with the lowest-cid tie rule,
+    * then (Σx + 2²⁰·n) / n − 2²⁰ per coordinate, and a centroid that
+    * lost every member keeps its position. Row order cannot matter:
+    * every step is an exact integer sum. PQ applies it per subspace. */
+  private[graft] def lloydFold(xs: Array[Array[Long]],
+      seeds: Array[Array[Long]], iters: Int): Array[Array[Long]] = {
+    var cents = seeds
+    for (_ <- 1 to iters) {
+      val sums = cents.map(m => new Array[Long](m.length))
+      val cnt = new Array[Long](cents.length)
+      xs.foreach { x =>
+        val c = nearestCid(x, cents)
+        cnt(c) += 1
+        val sc = sums(c)
+        var i = 0
+        while (i < math.min(x.length, sc.length)) { sc(i) += x(i); i += 1 }
+      }
+      cents = cents.indices.map { c =>
+        if (cnt(c) == 0) cents(c)
+        else sums(c).map(s => (s + KmShift * cnt(c)) / cnt(c) - KmShift)
+      }.toArray
+    }
     cents
   }
+
+  /** The training loop: seeds = the K corpus vectors with the
+    * smallest md5(vec_id‖':seed') draws (cid = draw rank), then
+    * [[KmIters]] exact Lloyd iterations. A frame of at most `bound`
+    * rows folds on the driver ([[lloydFold]]; one collect job);
+    * anything larger runs the distributed loop, where Subplan.once
+    * pins each iteration's K-row centroid table so the composed plan
+    * stays flat (the t24 round-frontier discipline). Both paths give
+    * the same rows (ExtSpec forces each); `bound = 0` forces the
+    * distributed loop on any non-empty frame. */
+  private[graft] def kmeansCentroids(fx: DataFrame, k: Int = KmK,
+      bound: Int = graft.ops.Subplan.DriverRows): DataFrame = {
+    val spark = fx.sparkSession
+    import spark.implicits._
+    graft.ops.Subplan.collectBounded(
+      fx.select(col("vec_id"), seedDraw.as("draw"), col("x"))
+        .as[(Long, Long, Array[Long])], bound) match {
+      case Some(rows) =>
+        val cents = lloydFold(rows.map(_._3), seedPoints(rows, k), KmIters)
+        spark.createDataFrame(cents.indices.map(c => Row(c, cents(c))).asJava,
+          KmCentsSchema)
+      case None =>
+        var cents = graft.ops.Subplan.once(
+          fx.join(broadcast(seedIdsOf(fx, k)), Seq("vec_id"))
+            .select(col("cid"), col("x").as("m")))
+        for (_ <- 1 to KmIters)
+          cents = graft.ops.Subplan.once(kmUpdate(kmAssign(fx, cents), cents))
+        cents
+    }
+  }
+
+  private val KmCentsSchema = StructType(Seq(
+    StructField("cid", IntegerType, nullable = false),
+    StructField("m", ArrayType(LongType, containsNull = true))))
 
   /** The registered s13 body: train the quantizer, build the posting
     * lists (one more [[kmAssign]] — the index build), probe each
@@ -1931,10 +2015,12 @@ object Similarity {
 
   /** The s19/s20 sampled-training draw — t08's md5 discipline applied
     * to quantizer TRAINING: Lloyd/PQ see only the deterministic 1/8
-    * sample (production IVF/PQ trains on ~10⁶ vectors however big the
-    * corpus — the training scans decouple from corpus size), the
-    * assignment pass covers everything. ONE definition with
-    * [[trainSampleSqlPred]]. */
+    * sample, the assignment pass covers everything. The draw is a
+    * fixed FRACTION, so the sample grows with the corpus (1/8 of
+    * 10⁹ vectors is still 1.25·10⁸); what keeps training off the
+    * driver's heap at scale is [[graft.ops.Subplan.collectBounded]]'s
+    * row bound, which sends a sample above it to the distributed loop.
+    * ONE definition with [[trainSampleSqlPred]]. */
   private[graft] def trainSampleVec: Column =
     conv(substring(md5(concat(col("vec_id").cast("string"), lit(":tr"))),
       1, 8), 16, 10).cast("long") % 8 === 0
@@ -2278,27 +2364,40 @@ object Similarity {
       .select(col("sub"), col("cid"), coalesce(col("mn"), col("pm")).as("m"))
   }
 
-  /** PQ codebook training: the [[KmK]]-style md5-draw seeding (one
-    * bounded-heap top-[[PqK]] — the same seed vectors serve every
-    * subspace) + [[PqIters]] grouped exact Lloyd rounds. */
-  private[graft] def pqCodebooks(fxs: DataFrame): DataFrame = {
-    val draw = conv(substring(md5(concat(col("vec_id").cast("string"),
-      lit(":seed"))), 1, 8), 16, 10).cast("long")
-    val seedIds = fxs.select(col("vec_id"), draw.as("draw"))
-      .agg(graft.functions.TopKAgg.topK(
-        struct((-col("draw")).as("nd"), (-col("vec_id")).as("nv"),
-          col("vec_id")), PqK).as("top"))
-      .select(posexplode(col("top")))
-      .select(col("pos").cast("int").as("cid"), col("col.vec_id").as("vec_id"))
-    var cents = graft.ops.Subplan.once(
-      fxs.join(broadcast(seedIds), Seq("vec_id"))
-        .select(col("cid"), posexplode(col("subs")))
-        .select(col("pos").cast("int").as("sub"), col("cid"),
-          col("col").as("m")))
-    for (_ <- 1 to PqIters)
-      cents = graft.ops.Subplan.once(pqUpdate(pqEncode(fxs, cents), cents))
-    cents
+  /** PQ codebook training: the [[KmK]]-style md5-draw seeding (the
+    * same seed vectors serve every subspace) + [[PqIters]] exact Lloyd
+    * rounds per subspace. Subspaces never interact, so the driver path
+    * is [[lloydFold]] once per subspace; the distributed loop groups
+    * the update by (sub, cid). Same `bound` rule as
+    * [[kmeansCentroids]]. */
+  private[graft] def pqCodebooks(fxs: DataFrame,
+      bound: Int = graft.ops.Subplan.DriverRows): DataFrame = {
+    val spark = fxs.sparkSession
+    import spark.implicits._
+    graft.ops.Subplan.collectBounded(
+      fxs.select(col("vec_id"), seedDraw.as("draw"), col("subs"))
+        .as[(Long, Long, Array[Array[Long]])], bound) match {
+      case Some(rows) =>
+        val seeds = seedPoints(rows, PqK)
+        val out = (0 until PqSubs).flatMap { sub =>
+          val cents = lloydFold(rows.map(_._3(sub)), seeds.map(_(sub)), PqIters)
+          cents.indices.map(c => Row(sub, c, cents(c)))
+        }
+        spark.createDataFrame(out.asJava, PqCentsSchema)
+      case None =>
+        var cents = graft.ops.Subplan.once(
+          fxs.join(broadcast(seedIdsOf(fxs, PqK)), Seq("vec_id"))
+            .select(col("cid"), posexplode(col("subs")))
+            .select(col("pos").cast("int").as("sub"), col("cid"),
+              col("col").as("m")))
+        for (_ <- 1 to PqIters)
+          cents = graft.ops.Subplan.once(pqUpdate(pqEncode(fxs, cents), cents))
+        cents
+    }
   }
+
+  private val PqCentsSchema = StructType(
+    StructField("sub", IntegerType, nullable = false) +: KmCentsSchema.fields)
 
   /** The registered s14 body: train codebooks, encode the corpus
     * (map-only — in deployment the 8-byte codes are the stored
@@ -2664,11 +2763,12 @@ object Similarity {
     val rev = knnTopK(
       nbr.select(col("w").as("v"), col("v").as("w"), col("d")), k)
     // Deliberately a MULTISET union (no distinct): a (u, p) present
-    // both forward and reversed duplicates a pair the scoring stage's
-    // own distinct removes anyway, the per-node bound is ≤ 2k
-    // adjacency rows and ≤ (2k)² candidate pairs EITHER way, and the
-    // dedup shuffle it saves is one of the five stages on the
-    // restricted fold's per-round floor.
+    // both forward and reversed yields a duplicate candidate whose
+    // rescored (d, w) struct is identical, so the distinct-mode
+    // [[knnTopK]] that closes the round keeps it in one slot anyway;
+    // the per-node bound is ≤ 2k adjacency rows and ≤ (2k)² candidate
+    // pairs EITHER way, and the dedup shuffle it saves is one of the
+    // five stages on the restricted fold's per-round floor.
     val adj = nbr.select(col("v").as("u"), col("w").as("p"))
       .unionAll(rev.select(col("v").as("u"), col("w").as("p")))
     // The restricted folds (s34 insert / s37 refine) only let TOUCHED

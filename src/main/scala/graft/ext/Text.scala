@@ -1,5 +1,7 @@
 package graft.ext
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -750,18 +752,17 @@ object Text {
     // Machine Translation of Rare Words with Subword Units"), kept
     // inside the house discipline end to end: exact integer pair
     // counts (occurrences × word frequency — no sampling, no floats),
-    // a total deterministic tie-break (count desc, then pair asc), and
-    // a BOUNDED driver loop of aggregations with Subplan.once between
-    // rounds — the d07 contraction shape; the driver carries only the
-    // round counter, never data. Applying a merge is the greedy
-    // left-to-right fold (acc's last symbol + next == the pair ⟹
-    // replace, else append) as an `aggregate` higher-order function —
+    // a total deterministic tie-break (count desc, then pair asc in
+    // binary UTF-8 order). A vocab the driver can hold runs every
+    // round on the driver after ONE collect; a larger one runs a
+    // bounded driver loop of aggregations with Subplan.once between
+    // rounds — the d07 contraction shape. Applying a merge is the
+    // greedy left-to-right fold (acc's last symbol + next == the pair
+    // ⟹ replace, else append) as an `aggregate` higher-order function —
     // per-word, map-side, codegen'd; the oracle restates the identical
     // fold via DuckDB's list_reduce, so the two engines agree on
-    // chain cases like a·a·a → (aa)·a exactly. The chosen pair rides
-    // a ConstKey-keyed broadcast back over the vocab (never a nested
-    // loop; an empty pair inventory degrades to a no-op via the left
-    // join, not a driver branch). Scale: ONE corpus-wide shuffle
+    // chain cases like a·a·a → (aa)·a exactly; an empty pair
+    // inventory is a no-op round. Scale: ONE corpus-wide shuffle
     // builds the (word, count) vocab frontier; every round after that
     // touches only the vocab — bounded by DISTINCT words, not corpus
     // size — so 100 TB of text trains at the same per-round cost as
@@ -1628,10 +1629,8 @@ object Text {
     * ONE wide shuffle (word frequencies), every round after that is
     * column algebra over the [[graft.ops.Subplan.once]]-materialized
     * (syms, cnt) vocab — bounded by DISTINCT words, not corpus size —
-    * and the driver carries only the round counter. The chosen pair
-    * re-enters the vocab as a [[graft.ops.ConstKey]]-keyed broadcast
-    * hash join (the Zero-BNLJ invariant); a 0-row pair inventory
-    * degrades to a no-op through the left join, never a driver branch.
+    * or, for a vocab the driver can hold, a driver fold (see
+    * [[bpeTrainFull]]). A 0-row pair inventory is a no-op round.
     * Merge application is the greedy left-to-right `aggregate` fold
     * (acc's last symbol = lhs ∧ next = rhs ⟹ replace-last-with-merged,
     * else append), which resolves chains like a·a·a → (aa)·a exactly
@@ -1644,10 +1643,17 @@ object Text {
     * `rounds` merges IS the word → subword segmentation t25 applies,
     * so learn and apply can never disagree on a word's pieces. The
     * word string rides the loop untouched (pair counting reads only
-    * syms/cnt); ONE loop serves both queries. */
-  private[graft] def bpeTrainFull(d: DataFrame,
-      rounds: Int): (DataFrame, DataFrame) = {
-    import graft.ops.{ConstKey, Subplan}
+    * syms/cnt); ONE loop serves both queries.
+    *
+    * A vocab of at most `bound` distinct words runs every round on the
+    * driver ([[bpeFold]]: one collect job for all rounds); a larger
+    * one runs the distributed rounds below. Both give the same rows
+    * (ExtSpec forces each); `bound = 0` forces the distributed loop. */
+  private[graft] def bpeTrainFull(d: DataFrame, rounds: Int,
+      bound: Int = graft.ops.Subplan.DriverRows): (DataFrame, DataFrame) = {
+    import graft.ops.Subplan
+    val spark = d.sparkSession
+    import spark.implicits._
     // The one corpus-wide shuffle: whitespace-word frequencies, each
     // word split to its codepoint symbol sequence. Everything after
     // reads this frontier, never the corpus.
@@ -1658,27 +1664,91 @@ object Text {
         .select(col("w"),
           regexp_extract_all(col("w"), lit("."), lit(0)).as("syms"),
           col("cnt")))
-    // The winner is collected, not checkpointed (round-18 cut): ONE
-    // bounded row per round — the t28/d21 driver-side-constant
-    // discipline — and folding it as literals makes the vocab update
-    // a pure map over the checkpointed frontier, dropping the
-    // winner's localCheckpoint job AND the 1-row broadcast build per
-    // round (2 of the 4 per-round job units; the pair-count action
-    // and the frontier checkpoint are the sequential minimum). The
-    // selection semantics are bpeBestPair's verbatim.
-    val spark = d.sparkSession
-    import spark.implicits._
-    val merged = (1 to rounds).flatMap { r =>
-      val bestRow = bpeBestPair(vocab).collect()
-      bestRow.headOption.map { b =>
-        val (lhs, rhs, cnt) =
-          (b.getString(0), b.getString(1), b.getLong(2))
-        vocab = Subplan.once(bpeApplyWinner(vocab, lhs, rhs))
-        (r, lhs, rhs, cnt)
-      }
+    val merged = Subplan.collectBounded(
+        vocab.as[(String, Array[String], Long)], bound) match {
+      case Some(words) =>
+        val (ms, out) = bpeFold(words, rounds)
+        // A merged vocab carries the round's schema (nullable syms).
+        val schema =
+          if (ms.isEmpty) vocab.schema else bpeApplyWinner(vocab, "", "").schema
+        vocab = spark.createDataFrame(out.map { case (w, syms, cnt) =>
+          org.apache.spark.sql.Row(w, syms.toSeq, cnt) }.toSeq.asJava, schema)
+        ms
+      case None =>
+        // The winner is collected, not checkpointed: ONE bounded row
+        // per round — the t28/d21 driver-side-constant discipline —
+        // folded as literals, so the vocab update is a pure map over
+        // the checkpointed frontier (the pair-count action and the
+        // frontier checkpoint are the sequential minimum per round).
+        // The selection semantics are bpeBestPair's verbatim.
+        (1 to rounds).flatMap { r =>
+          bpeBestPair(vocab).collect().headOption.map { b =>
+            val (lhs, rhs, cnt) =
+              (b.getString(0), b.getString(1), b.getLong(2))
+            vocab = Subplan.once(bpeApplyWinner(vocab, lhs, rhs))
+            (r, lhs, rhs, cnt)
+          }
+        }
     }
     (merged.toDF("merge_rank", "lhs", "rhs", "pair_count"), vocab)
   }
+
+  /** All merge rounds over a driver-held (w, syms, cnt) vocab — the
+    * distributed round's twin: pair counts weighted by word frequency,
+    * the winner by count desc then (lhs, rhs) ascending in binary
+    * UTF-8 order (UTF8String, as Spark's sort compares — String's
+    * UTF-16 order differs above the BMP), applied by [[bpeMerge]].
+    * A round with no adjacent pair left is a no-op. Returns
+    * (merge table rows, final vocab). */
+  private[graft] def bpeFold(words: Array[(String, Array[String], Long)],
+      rounds: Int): (Seq[(Int, String, String, Long)],
+        Array[(String, Array[String], Long)]) = {
+    import org.apache.spark.unsafe.types.UTF8String
+    def utf8(a: String) = UTF8String.fromString(a)
+    var vocab = words
+    val merged = (1 to rounds).flatMap { r =>
+      val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
+      vocab.foreach { case (_, syms, cnt) =>
+        var i = 0
+        while (i + 1 < syms.length) {
+          val p = (syms(i), syms(i + 1))
+          counts(p) = counts.getOrElse(p, 0L) + cnt
+          i += 1
+        }
+      }
+      counts.reduceOption { (a, b) =>
+        val ((al, ar), ac) = a
+        val ((bl, br), bc) = b
+        val cmp = if (ac != bc) java.lang.Long.compare(bc, ac)
+          else utf8(al).binaryCompare(utf8(bl)) match {
+            case 0 => utf8(ar).binaryCompare(utf8(br))
+            case c => c
+          }
+        if (cmp <= 0) a else b
+      }.map { case ((lhs, rhs), cnt) =>
+        vocab = vocab.map { case (w, syms, c) => (w, bpeMerge(syms, lhs, rhs), c) }
+        (r, lhs, rhs, cnt)
+      }
+    }
+    (merged, vocab)
+  }
+
+  /** [[bpeMergeFold]] on a driver array: greedy left to right, a
+    * (lhs, rhs) adjacency whose lhs is the accumulator's last symbol
+    * becomes one merged symbol. */
+  private def bpeMerge(syms: Array[String], lhs: String,
+      rhs: String): Array[String] =
+    if (syms.isEmpty) syms
+    else {
+      val acc = scala.collection.mutable.ArrayBuffer(syms(0))
+      var i = 1
+      while (i < syms.length) {
+        if (acc.last == lhs && syms(i) == rhs) acc(acc.length - 1) = lhs + rhs
+        else acc += syms(i)
+        i += 1
+      }
+      acc.toArray
+    }
 
   /** One merge round's winner off the current vocab frontier:
     * exact-integer adjacent-pair counts — each in-word occurrence

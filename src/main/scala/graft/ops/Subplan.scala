@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** Shared-subplan materialization for DAG-shaped queries.
   *
@@ -40,4 +40,21 @@ object Subplan {
     * plan reads the materialized partitions instead of re-deriving
     * them. See object doc for lifecycle and failure semantics. */
   def once(df: DataFrame): DataFrame = df.localCheckpoint()
+
+  /** The row bound under which an iterated training loop (k-means,
+    * PQ, BPE merges) folds on the driver instead of paying one Spark
+    * job per round. 2¹⁶ rows of 64 longs is ~32 MB of driver heap. */
+  val DriverRows: Int = 1 << 16
+
+  /** `ds`'s rows iff it holds at most `bound` of them, else None. The
+    * size check IS the collect (`limit(bound + 1)`), so the bounded
+    * path runs no separate count job and the unbounded one stops
+    * reading after `bound + 1` rows. Callers pick the driver fold or
+    * the distributed loop from the answer — the observed row count,
+    * never an option — so inputs the driver cannot hold (the 100 TB
+    * case) keep the distributed path. */
+  def collectBounded[T](ds: Dataset[T], bound: Int): Option[Array[T]] = {
+    val rows = ds.limit(bound + 1).collect()
+    if (rows.length <= bound) Some(rows) else None
+  }
 }

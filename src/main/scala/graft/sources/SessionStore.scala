@@ -93,8 +93,11 @@ object SessionStore {
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
 
   /** The landed path of an already-built parquet store — None if this
-    * JVM has not built it (or has retired it). Diagnostics/spec
-    * accessor: answers never read through this. */
+    * JVM has not built it (or has retired it). Answers never read rows
+    * through this path, but a query may gate work on liveness: s45's
+    * warm path skips rebuilding a generation it would only retire.
+    * Such a gate cannot change rows, because every store build is
+    * deterministic; specs also use it to find landed directories. */
   def livePath(name: String, dir: String): Option[String] =
     Option(built.get(keyOf(name, dir)))
 

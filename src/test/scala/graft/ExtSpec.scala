@@ -2209,10 +2209,10 @@ class ExtSpec extends AnyFunSuite {
 
   test("s13 exact-integer k-means: a JVM Lloyd recompute reproduces the " +
       "centroids bit-for-bit, and the query is the probed cells' exact top-5") {
-    // Full independent JVM replay of the training loop — fixed-point
-    // lattice, exact int64 distances, truncating-division means, the
-    // empty-cluster keep rule — the t27 one-window-recompute
-    // discipline applied to the trained quantizer.
+    // The driver Lloyd fold (lloydFold), seeded by a JVM md5 ranking,
+    // must equal the forced distributed Spark loop (bound = 0) bit for
+    // bit: two independent statements of the same exact-integer
+    // training (the t27 one-window-recompute discipline).
     val raw = Tables(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .collect().map(r => r.getAs[Long]("vec_id") ->
@@ -2224,39 +2224,25 @@ class ExtSpec extends AnyFunSuite {
     val seeds = fx.keys.toSeq
       .sortBy(id => (java.lang.Long.parseLong(md5hex(s"$id:seed").take(8), 16), id))
       .take(k)
-    var cents: Map[Int, Array[Long]] =
-      seeds.zipWithIndex.map { case (id, i) => i -> fx(id) }.toMap
+    val cents = ext.Similarity.lloydFold(fx.values.toArray,
+      seeds.map(fx).toArray, ext.Similarity.KmIters)
     def dist(x: Array[Long], m: Array[Long]): Long = {
       var d = 0L; var i = 0
       while (i < x.length) { val t = x(i) - m(i); d += t * t; i += 1 }
       d
     }
     def assign(): Map[Long, Int] = fx.map { case (id, x) =>
-      id -> (0 until k).minBy(c => (dist(x, cents(c)), c))
-    }
-    for (_ <- 1 to ext.Similarity.KmIters) {
-      val asg = assign()
-      cents = (0 until k).map { c =>
-        val members = asg.collect { case (id, `c`) => fx(id) }.toSeq
-        if (members.isEmpty) c -> cents(c)
-        else {
-          val n = members.size.toLong
-          c -> Array.tabulate(64) { i =>
-            val s = members.map(_(i)).sum
-            (s + 1048576L * n) / n - 1048576L
-          }
-        }
-      }.toMap
+      id -> ext.Similarity.nearestCid(x, cents)
     }
     val fxDf = Tables(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .select(col("vec_id"), col("v"), ext.Similarity.fixedPoint(col("v")).as("x"))
-    val gotCents = ext.Similarity.kmeansCentroids(fxDf).collect()
+    val gotCents = ext.Similarity.kmeansCentroids(fxDf, bound = 0).collect()
       .map(r => r.getAs[Int]("cid") ->
         r.getAs[scala.collection.Seq[Long]]("m").toArray).toMap
-    assert(gotCents.keySet == cents.keySet)
-    cents.foreach { case (c, m) =>
-      assert(gotCents(c).sameElements(m), s"centroid $c drifted from the JVM replay")
+    assert(gotCents.keySet == cents.indices.toSet)
+    cents.zipWithIndex.foreach { case (m, c) =>
+      assert(gotCents(c).sameElements(m), s"centroid $c: distributed loop != driver fold")
     }
     // Postings partition the corpus; every cell is populated here.
     val asg = assign()
@@ -2295,43 +2281,38 @@ class ExtSpec extends AnyFunSuite {
     val seeds = subsOf.keys.toSeq
       .sortBy(id => (java.lang.Long.parseLong(md5hex(s"$id:seed").take(8), 16), id))
       .take(k)
-    // cents(sub)(cid) = lattice point
-    var cents: Array[Map[Int, Array[Long]]] = Array.tabulate(8)(s =>
-      seeds.zipWithIndex.map { case (id, c) => c -> subsOf(id)(s) }.toMap)
+    // cents(sub)(cid) = lattice point: the one Lloyd fold per subspace
+    val cents: Array[Array[Array[Long]]] = Array.tabulate(8)(s =>
+      ext.Similarity.lloydFold(subsOf.values.map(_(s)).toArray,
+        seeds.map(subsOf(_)(s)).toArray, ext.Similarity.PqIters))
     def dist(x: Array[Long], m: Array[Long]): Long = {
       var d = 0L; var i = 0
       while (i < x.length) { val t = x(i) - m(i); d += t * t; i += 1 }
       d
     }
     def encode(): Map[Long, Array[Int]] = subsOf.map { case (id, subs) =>
-      id -> Array.tabulate(8)(s =>
-        cents(s).keys.toSeq.sorted.minBy(c => (dist(subs(s), cents(s)(c)), c)))
+      id -> Array.tabulate(8)(s => ext.Similarity.nearestCid(subs(s), cents(s)))
     }
-    for (_ <- 1 to ext.Similarity.PqIters) {
-      val codes = encode()
-      cents = Array.tabulate(8) { s =>
-        cents(s).map { case (c, prev) =>
-          val members = codes.collect {
-            case (id, cs) if cs(s) == c => subsOf(id)(s)
-          }.toSeq
-          if (members.isEmpty) c -> prev
-          else {
-            val n = members.size.toLong
-            c -> Array.tabulate(8) { i =>
-              (members.map(_(i)).sum + 1048576L * n) / n - 1048576L
-            }
-          }
-        }
-      }
-    }
+    // The forced distributed loop (grouped by (sub, cid)) trains the
+    // same codebooks.
+    val fxsDf = Tables(spark, sf, "embeddings")
+      .select(col("vec_id"), ext.Similarity.fixedPoint(
+        col("embedding").cast("array<double>")).as("x"))
+      .select(col("vec_id"), array((0 until 8).map(s =>
+        slice(col("x"), s * 8 + 1, 8)): _*).as("subs"))
+    val gotCb = ext.Similarity.pqCodebooks(fxsDf, bound = 0).collect()
+      .map(r => (r.getAs[Int]("sub"), r.getAs[Int]("cid")) ->
+        r.getAs[scala.collection.Seq[Long]]("m").toSeq).toMap
+    assert(gotCb == (for (s <- 0 until 8; c <- 0 until k)
+      yield (s, c) -> cents(s)(c).toSeq).toMap,
+      "distributed PQ loop != driver fold")
     val codes = encode()
     // ADC replay: per query the [8][16] subdistance table, candidates
     // scored by code lookup, exact-int top-5 ascending (ties → id).
     val got = SparkEntry.queries("s14_pq_adc")(spark, sf).collect()
     assert(got.nonEmpty)
     got.groupBy(_.getAs[Long]("qid")).foreach { case (qid, g) =>
-      val qd = Array.tabulate(8)(s =>
-        cents(s).keys.toSeq.sorted.map(c => dist(subsOf(qid)(s), cents(s)(c))).toArray)
+      val qd = Array.tabulate(8)(s => cents(s).map(c => dist(subsOf(qid)(s), c)))
       val want = codes.collect { case (id, cs) if id != qid =>
         (id, (0 until 8).map(s => qd(s)(cs(s))).sum)
       }.toSeq.sortBy { case (id, adc) => (adc, id) }.take(5)
@@ -2359,57 +2340,41 @@ class ExtSpec extends AnyFunSuite {
     }
     def drawRank(id: Long): (Long, Long) =
       (java.lang.Long.parseLong(md5hex(s"$id:seed").take(8), 16), id)
-    // --- coarse: the s13 training replay ---
+    // --- coarse: the s13 driver fold ---
     val kc = ext.Similarity.KmK
-    var cents: Map[Int, Array[Long]] = fx.keys.toSeq.sortBy(drawRank).take(kc)
-      .zipWithIndex.map { case (id, i) => i -> fx(id) }.toMap
-    def assign(): Map[Long, Int] = fx.map { case (id, x) =>
-      id -> (0 until kc).minBy(c => (dist(x, cents(c)), c))
-    }
-    for (_ <- 1 to ext.Similarity.KmIters) {
-      val asg = assign()
-      cents = (0 until kc).map { c =>
-        val members = asg.collect { case (id, `c`) => fx(id) }.toSeq
-        if (members.isEmpty) c -> cents(c)
-        else {
-          val n = members.size.toLong
-          c -> Array.tabulate(64)(i =>
-            (members.map(_(i)).sum + 1048576L * n) / n - 1048576L)
-        }
-      }.toMap
-    }
-    val cell = assign()
-    // --- residual PQ: the s14 training replay over x − m(cell) ---
+    val cents = ext.Similarity.lloydFold(fx.values.toArray,
+      fx.keys.toSeq.sortBy(drawRank).take(kc).map(fx).toArray,
+      ext.Similarity.KmIters)
+    val cell = fx.map { case (id, x) => id -> ext.Similarity.nearestCid(x, cents) }
+    // --- residual PQ: the s14 per-subspace fold over x − m(cell) ---
     val rsubs = fx.map { case (id, x) =>
       val m = cents(cell(id))
       id -> Array.tabulate(8)(s =>
         Array.tabulate(8)(i => x(s * 8 + i) - m(s * 8 + i)))
     }
-    val kp = ext.Similarity.PqK
-    val seeds = fx.keys.toSeq.sortBy(drawRank).take(kp)
-    var pq: Array[Map[Int, Array[Long]]] = Array.tabulate(8)(s =>
-      seeds.zipWithIndex.map { case (id, c) => c -> rsubs(id)(s) }.toMap)
-    def encode(): Map[Long, Array[Int]] = rsubs.map { case (id, subs) =>
-      id -> Array.tabulate(8)(s =>
-        pq(s).keys.toSeq.sorted.minBy(c => (dist(subs(s), pq(s)(c)), c)))
+    val seeds = fx.keys.toSeq.sortBy(drawRank).take(ext.Similarity.PqK)
+    val pq = Array.tabulate(8)(s =>
+      ext.Similarity.lloydFold(rsubs.values.map(_(s)).toArray,
+        seeds.map(rsubs(_)(s)).toArray, ext.Similarity.PqIters))
+    val codes = rsubs.map { case (id, subs) =>
+      id -> Array.tabulate(8)(s => ext.Similarity.nearestCid(subs(s), pq(s)))
     }
-    for (_ <- 1 to ext.Similarity.PqIters) {
-      val codes = encode()
-      pq = Array.tabulate(8) { s =>
-        pq(s).map { case (c, prev) =>
-          val members = codes.collect {
-            case (id, cs) if cs(s) == c => rsubs(id)(s)
-          }.toSeq
-          if (members.isEmpty) c -> prev
-          else {
-            val n = members.size.toLong
-            c -> Array.tabulate(8)(i =>
-              (members.map(_(i)).sum + 1048576L * n) / n - 1048576L)
-          }
-        }
-      }
-    }
-    val codes = encode()
+    // --- the forced distributed loops train the same composition ---
+    val fxDf = Tables(spark, sf, "embeddings")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      .select(col("vec_id"), col("v"), ext.Similarity.fixedPoint(col("v")).as("x"))
+    val centsDf = ext.Similarity.kmeansCentroids(fxDf, bound = 0)
+    assert(centsDf.collect().map(r => r.getAs[Int]("cid") ->
+      r.getAs[scala.collection.Seq[Long]]("m").toSeq).toMap ==
+      cents.indices.map(c => c -> cents(c).toSeq).toMap,
+      "distributed coarse loop != driver fold")
+    val pqDf = ext.Similarity.pqCodebooks(
+      ext.Similarity.residFrame(fxDf, centsDf).select(col("vec_id"), col("subs")),
+      bound = 0)
+    assert(pqDf.collect().map(r => (r.getAs[Int]("sub"), r.getAs[Int]("cid")) ->
+      r.getAs[scala.collection.Seq[Long]]("m").toSeq).toMap ==
+      (for (s <- 0 until 8; c <- pq(s).indices) yield (s, c) -> pq(s)(c).toSeq).toMap,
+      "distributed residual PQ loop != driver fold")
     // --- probe: 2 nearest coarse cells, per-cell residual tables ---
     val got = SparkEntry.queries("s16_ivfadc")(spark, sf).collect()
     assert(got.nonEmpty)
@@ -2420,8 +2385,7 @@ class ExtSpec extends AnyFunSuite {
         val m = cents(cc)
         val rq = Array.tabulate(8)(s =>
           Array.tabulate(8)(i => fx(qid)(s * 8 + i) - m(s * 8 + i)))
-        val qd = Array.tabulate(8)(s =>
-          pq(s).keys.toSeq.sorted.map(c => dist(rq(s), pq(s)(c))).toArray)
+        val qd = Array.tabulate(8)(s => pq(s).map(c => dist(rq(s), c)))
         codes.collect { case (id, cs) if id != qid && cell(id) == cc =>
           (id, (0 until 8).map(s => qd(s)(cs(s))).sum)
         }
@@ -2430,6 +2394,61 @@ class ExtSpec extends AnyFunSuite {
         .map(r => (r.getAs[Long]("nn_id"), r.getAs[Long]("adc"))).toSeq
       assert(gotRows == want, s"qid=$qid: $gotRows != $want")
     }
+  }
+
+  test("trainers: the driver fold and the forced distributed loop " +
+      "(bound = 0) return the same rows and schema") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    // The guard: at most `bound` rows come back, one more means None.
+    val three = Seq(1, 2, 3).toDF("i")
+    assert(graft.ops.Subplan.collectBounded(three, 3).map(_.length) == Some(3))
+    assert(graft.ops.Subplan.collectBounded(three, 2).isEmpty)
+    def bag(df: DataFrame) = df.collect().toSeq.groupMapReduce(_.toSeq)(_ => 1)(_ + _)
+    def local(df: DataFrame) = df.queryExecution.analyzed.isInstanceOf[LocalRelation]
+    def same(name: String, fold: DataFrame, dist: DataFrame): Unit = {
+      assert(local(fold), s"$name: the default bound must take the driver fold")
+      assert(!local(dist), s"$name: bound = 0 must take the distributed loop")
+      assert(fold.schema == dist.schema, s"$name: ${fold.schema} != ${dist.schema}")
+      val (f, d) = (bag(fold), bag(dist))
+      assert(f.nonEmpty && f == d, s"$name: driver fold $f != distributed $d")
+    }
+    val fx = graft.ops.Subplan.once(ext.Similarity.emb(spark, sf)
+      .select(col("vec_id"), col("v"), ext.Similarity.fixedPoint(col("v")).as("x")))
+    val km = ext.Similarity.kmeansCentroids(_: DataFrame, _: Int, _: Int)
+    same("kmeans full", km(fx, ext.Similarity.KmK, graft.ops.Subplan.DriverRows),
+      km(fx, ext.Similarity.KmK, 0))
+    val sample = fx.filter(ext.Similarity.trainSampleVec)
+    same("kmeans sample", km(sample, ext.Similarity.KmK, graft.ops.Subplan.DriverRows),
+      km(sample, ext.Similarity.KmK, 0))
+    // semK at sf10 (80 cells): more cells than this fixture fills, so
+    // the empty-cell keep rule runs on both paths.
+    val semK = ext.Similarity.semK(200000L)
+    same("kmeans semK", km(fx, semK, graft.ops.Subplan.DriverRows), km(fx, semK, 0))
+    val rsubs = ext.Similarity.residFrame(fx, km(fx, ext.Similarity.KmK, 0))
+      .select(col("vec_id"), col("subs"))
+    same("pq", ext.Similarity.pqCodebooks(rsubs), ext.Similarity.pqCodebooks(rsubs, 0))
+    // BPE: the Sennrich fixture, the greedy chain, a run that dries up
+    // to no-ops, a vocab with no pair at all, and a count tie whose
+    // winner differs between UTF-16 and binary UTF-8 order (U+FF61 ｡
+    // sorts after U+1F600 😀 as UTF-16 units, before it as UTF-8).
+    Seq(
+      ("sennrich", "low low low lower lower newest newest newest newest widest", 3),
+      ("chain", "aaa aaa aaa", 3),
+      ("dry-up", "ab ab ba", 5),
+      ("no pair", "a b a", 2),
+      ("utf-8 order", "\uFF61a \uD83D\uDE00a", 1)).foreach { case (name, text, rounds) =>
+      val d = Seq(text).toDF("text")
+      val (fm, fv) = ext.Text.bpeTrainFull(d, rounds)
+      val (dm, dv) = ext.Text.bpeTrainFull(d, rounds, bound = 0)
+      assert(fm.collect().toSeq == dm.collect().toSeq, s"bpe $name merges")
+      assert(fm.schema == dm.schema, s"bpe $name merge schema")
+      same(s"bpe $name vocab", fv, dv)
+    }
+    assert(ext.Text.bpeTrain(Seq("\uFF61a \uD83D\uDE00a").toDF("text"), 1)
+      .collect().map(r => (r.getString(1), r.getString(2))).toSeq ==
+      Seq(("\uFF61", "a")), "the tie must break by binary UTF-8 order")
   }
 
   test("m10 scene shots partition the m05 energy track and match a " +

@@ -830,6 +830,20 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
   }
 
+  test("e05: the optimized plan parses props exactly once") {
+    // The null-k filter must stay above the parsing projection: pushed
+    // below it, Catalyst re-evaluates from_json in the Filter AND the
+    // Project (2 parses per row). What holds it there is the
+    // `|| _barrier < 0` arm on a nondeterministic column, so pin the
+    // parse count rather than the arm.
+    val opt = SparkEntry.queries("e05_props_struct")(spark, sf)
+      .queryExecution.optimizedPlan
+    val parses = opt.collect { case n => n.expressions.map(_.collect {
+      case j: org.apache.spark.sql.catalyst.expressions.JsonToStructs => j
+    }.size).sum }.sum
+    assert(parses == 1, s"expected one from_json, found $parses:\n$opt")
+  }
+
   test("e09: retention matrix reads the one materialized (user, day) frontier") {
     val p = plan("e09_cohort_retention")
     assert("Scan parquet".r.findAllIn(p).isEmpty && p.contains("ExistingRDD"),
